@@ -1,6 +1,6 @@
 """`VectorDatabase` facade — the reference's class shape on Spark.
 
-Mirrors the public API of /root/reference/local_db.py:11 (`add`,
+Mirrors the public API of the reference's `local_db.py:11` (`add`,
 `query_text`, `query_vector`, `query_metadata`, `hybrid_search`,
 `get_document`, `get_metadata`, `save`, `load`, `__len__`) so reference
 users can port call sites 1:1, while every method compiles to a declarative
@@ -12,23 +12,26 @@ lists (local_db.py:35-38). `add` is unionByName + stats invalidation instead
 of the reference's full-rebuild-per-add (README.md:152); persistence is
 parquet + a JSON manifest instead of pickle sniffing (local_db.py:210-265).
 
-index_type: 'flat' → exact brute-force (default; the only hash-checkable
-path, mirroring test_local_db.py:155-157's "flat is exact" stance);
-'lsh' (HNSW role) and 'ivf' (coarse-cell role) → ann.py, recall-tested;
-'ivfpq' → the REAL residual-encoded IVF-PQ tier (pq.build_ivfpq — ADC
-shortlist over probed cells, exact rerank; faiss IndexIVFPQ parity);
-'nsw' (graph tier behind the 'hnsw' alias) → nsw.py; 'sq8' / 'bq' /
-'ivfbq' (compressed shortlist → exact rerank; ivfbq adds coarse-cell
-scan pruning) → sq.py / bq.py; 'opq' (rotated PQ — FAISS OPQMatrix
-role: PCA rotation + eigenvalue-balanced subspaces ahead of the PQ
-kernel, ADC shortlist → exact rerank) → opq.py; 'ivfopq' (the FAISS
-OPQ{m}+IVF{nlist},PQ{m} stack: rotation ahead of coarse cells AND
-residual codebooks, probed-cell ADC → exact original-frame rerank)
-→ opq.py.
+index_type picks the vector index in one place, as the reference's
+constructor does (local_db.py:41-54); `_TIERS` maps each type to its
+operator module:
+- 'flat' → exact brute-force (default; the only hash-checkable path,
+  mirroring test_local_db.py:155-157's "flat is exact" stance);
+- 'nsw' (the graph tier behind the reference's 'hnsw' spelling) → nsw.py;
+- 'lsh' (random-projection buckets) and 'ivf' (coarse cells) → ann.py;
+- 'ivfpq' → pq.py, the residual-encoded IVF-PQ tier (faiss IndexIVFPQ
+  parity: ADC shortlist over probed cells, exact rerank);
+- 'sq8' / 'bq' / 'ivfbq' → sq.py / bq.py (compressed shortlist → exact
+  rerank; ivfbq adds coarse-cell scan pruning);
+- 'opq' / 'ivfopq' → opq.py (FAISS OPQMatrix rotation ahead of the PQ
+  kernel, and the OPQ{m}+IVF{nlist},PQ{m} stack; exact original-frame
+  rerank).
 """
 
 from __future__ import annotations
 
+import dataclasses
+import importlib
 import json
 import os
 from typing import Any, Callable, Mapping, Sequence
@@ -52,19 +55,49 @@ def _clamp_m(pq_code_size: int, dim: int) -> int:
     return m
 
 
-_INDEX_TYPES = (
-    "flat", "lsh", "ivf", "ivfpq", "nsw", "sq8", "bq", "ivfbq", "opq",
-    "ivfopq",
-)
+# index_type → (operator module, function stem). Each tier's operators are
+# named uniformly — `build_<stem>`, `<stem>_add`, `<stem>_delete`,
+# `save_<stem>`, `load_<stem>` — and are looked up on the module at call
+# time (`_tier_op`), so wrappers installed on the module apply. A tier
+# without `<stem>_add` / `<stem>_delete` rebuilds lazily after a mutation.
+_TIERS = {
+    "flat": None,
+    "lsh": ("ann", "lsh"),
+    "ivf": ("ann", "ivf"),
+    "ivfpq": ("pq", "ivfpq"),
+    "nsw": ("nsw", "nsw"),
+    "sq8": ("sq", "sq"),
+    "bq": ("bq", "bq"),
+    "ivfbq": ("bq", "ivfbq"),
+    "opq": ("opq", "opq"),
+    "ivfopq": ("opq", "ivfopq"),
+}
+_INDEX_TYPES = tuple(_TIERS)
 # Reference spellings (local_db.py:24: 'hnsw' | 'flat' | 'ivfpq') map onto
 # the Spark-native tier that fills the same role, so reference call sites
-# port 1:1. "hnsw" maps to the sharded NSW GRAPH tier (operators/nsw.py)
-# so the reference's M / ef_construction / ef_search kwargs are live, not
-# inert. "ivfpq" is the REAL residual-encoded IVF-PQ tier (operators/pq.py
-# build_ivfpq — the faiss IndexIVFPQ layout the reference wraps,
-# local_db.py:49-52): ADC shortlist over probed cells, exact rerank;
-# pq_code_size maps to m.
+# port 1:1: "hnsw" is the sharded NSW graph tier, where M / ef_construction
+# / ef_search are live.
 _INDEX_ALIASES = {"hnsw": "nsw"}
+# The code tiers store per-row codes against FROZEN trained geometry, so a
+# delete is an exact filter of these code relations (dotted field paths):
+# search results equal a from-scratch rebuild minus the rows.
+_CODE_RELATIONS = {
+    "ivf": ("assignments",),
+    "ivfpq": ("pq.codes", "codes_with_cluster"),
+    "sq8": ("codes",),
+    "bq": ("codes",),
+    "opq": ("pq_index.codes",),
+    "ivfopq": ("ivfpq.pq.codes", "ivfpq.codes_with_cluster"),
+}
+
+
+def _filter_relation(index, path: str, cond: Column):
+    """`index` with the DataFrame at dotted field `path` filtered by
+    `cond`, rebuilding each enclosing dataclass with `replace`."""
+    head, _, rest = path.partition(".")
+    value = getattr(index, head)
+    value = _filter_relation(value, rest, cond) if rest else value.where(cond)
+    return dataclasses.replace(index, **{head: value})
 
 
 class VectorDatabase:
@@ -86,13 +119,14 @@ class VectorDatabase:
         """Reference constructor shape (local_db.py:21-54) ports 1:1.
 
         Tuning-kwarg mapping onto the Spark tiers:
+        - `M` / `ef_construction` → the graph tier's build degree and
+          construction beam ('hnsw' / 'nsw'), as in hnswlib;
+        - `ef_search` → the graph tier's search beam; on the IVF tiers it
+          sets the probe width, nprobe = ef_search // 10 (the reference
+          default 50 → 5 ≈ FAISS's nlist // 10);
         - `ivf_clusters` → IVF nlist (same meaning as FAISS nlist);
-        - `ef_search` → IVF nprobe-style probe width at query time
-          (HNSW's beam width plays the same recall/cost role);
-        - `ef_construction` / `M` / `pq_code_size` are HNSW-graph / PQ
-          build params with no direct analogue in the LSH tier — accepted
-          and recorded so reference call sites run, documented as
-          inert (build_pq takes its own m/codebook_size);
+        - `pq_code_size` → the PQ subspace count m of 'ivfpq' / 'opq' /
+          'ivfopq', clamped to a divisor of dim;
         - `init_index` is inert: all derived state here is lazy.
         """
         # parity: reject unknown index types (local_db.py:53-54);
@@ -112,7 +146,7 @@ class VectorDatabase:
         self.init_index = init_index
         self._df: DataFrame | None = None
         self._stats: bm25.BM25Stats | None = None
-        self._ann_index = None  # LSHIndex | IVFIndex, built lazily
+        self._ann_index = None  # the tier's index dataclass, built lazily
         self._n = 0
         # high-water mark for id assignment: bumped by add, never reduced
         # by delete, so deleted ids are never reissued to new documents
@@ -123,7 +157,27 @@ class VectorDatabase:
         # add-stream rebalance trigger without thousands of rows
         self._nsw_rows_per_shard = 2000
 
+    def _tier_op(self, name: str):
+        """This tier's operator `name.format(stem)` (e.g. "{}_add"), read
+        from its module at call time; None if the tier has none."""
+        module, stem = _TIERS[self.index_type]
+        module = importlib.import_module(
+            f"homemade_vector_db_spark.operators.{module}"
+        )
+        return getattr(module, name.format(stem), None)
+
     # ------------------------------------------------------------------ ingest
+    def _rows_df(self, rows: list[tuple]) -> DataFrame:
+        schema = T.StructType(
+            [
+                T.StructField(self.id_col, T.LongType()),
+                T.StructField(self.text_col, T.StringType()),
+                T.StructField(self.vec_col, T.ArrayType(T.FloatType())),
+                T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
+            ]
+        )
+        return self.spark.createDataFrame(rows, schema)
+
     def add(
         self,
         docs: Sequence[str],
@@ -146,15 +200,7 @@ class VectorDatabase:
             (start + i, d, [float(x) for x in v], {k: str(val) for k, val in m.items()})
             for i, (d, v, m) in enumerate(zip(docs, vectors, metas))
         ]
-        schema = T.StructType(
-            [
-                T.StructField(self.id_col, T.LongType()),
-                T.StructField(self.text_col, T.StringType()),
-                T.StructField(self.vec_col, T.ArrayType(T.FloatType())),
-                T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-            ]
-        )
-        new = self.spark.createDataFrame(rows, schema)
+        new = self._rows_df(rows)
         self._df = new if self._df is None else self._df.unionByName(new)
         self._n += len(rows)
         self._next_id = start + len(rows)
@@ -162,137 +208,58 @@ class VectorDatabase:
         self._maintain_index_on_append(new)
 
     def _maintain_index_on_append(self, new: DataFrame) -> None:
-        """Per-tier incremental index maintenance for an appended row
-        block (shared by add and merge): IVF/SQ/BQ encode with frozen
-        trained geometry; the graph tier inserts incrementally and
-        auto-rebalances; other tiers rebuild lazily."""
-        if self._ann_index is not None and self.index_type == "ivf":
-            # incremental maintenance: assign the batch to existing cells
-            # (no refit) — vs the reference rebuilding per add
-            # (local_db.py:82-111)
-            from homemade_vector_db_spark.operators import ann
-
-            self._ann_index = ann.ivf_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "ivfpq":
-            from homemade_vector_db_spark.operators import pq as pqmod
-
-            self._ann_index = pqmod.ivfpq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "sq8":
-            # add-after-train: encode with the FROZEN trained geometry
-            from homemade_vector_db_spark.operators import sq as sqmod
-
-            self._ann_index = sqmod.sq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "bq":
-            from homemade_vector_db_spark.operators import bq as bqmod
-
-            self._ann_index = bqmod.bq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "opq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            self._ann_index = opqmod.opq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type == "ivfopq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            self._ann_index = opqmod.ivfopq_add(self._ann_index, new)
-        elif self._ann_index is not None and self.index_type in ("hnsw", "nsw"):
-            # incremental graph insert — hnswlib add_items parity
-            # (local_db.py:78-80): same shard hash, same level law, the
-            # shared insertion loop continues from the existing graph
-            from homemade_vector_db_spark.operators import nsw as nswmod
-
-            if self._ann_index.n_shards <= 0:
-                # legacy pre-round-4 manifest (shard count unknown):
-                # db.add already knows how to rebalance, so repair here
-                # instead of surfacing nsw_add's operator-level ValueError
-                # — the hard error stays for direct operator use.
-                self._ann_index = nswmod.nsw_rebalance(
-                    self._ann_index, rows_per_shard=self._nsw_rows_per_shard
-                )
-            self._ann_index = nswmod.nsw_add(self._ann_index, new)
-            # hnswlib resize analogue (local_db.py:45 max_elements): a
-            # long add stream keeps the shard count fixed (it is index
-            # identity), so shards fatten until the per-shard sequential
-            # insert/beam dominates. When mean shard size reaches 4x the
-            # build-time target, re-shard offline — recall is preserved
-            # (levels are an id-hash law; links re-prune under the same
-            # discipline), only shard membership changes.
-            idx = self._ann_index
-            if self._n >= 4 * idx.rows_per_shard * idx.shard_count():
-                self._ann_index = nswmod.nsw_rebalance(
-                    idx, rows_per_shard=idx.rows_per_shard
-                )
-        else:
+        """Incremental index maintenance for an appended row block (shared
+        by add, merge and update) through the tier's `<stem>_add`: the
+        code tiers encode with frozen trained geometry, the graph tier
+        inserts incrementally (hnswlib add_items parity, local_db.py:78-80)
+        and auto-rebalances; tiers without one rebuild lazily."""
+        idx = self._ann_index
+        add = idx is not None and self._tier_op("{}_add")
+        if not add:
             self._ann_index = None
+            return
+        from homemade_vector_db_spark.operators import nsw
+
+        graph = self.index_type == "nsw"
+        if graph and idx.n_shards <= 0:
+            # legacy manifest (shard count unknown): rebalance here instead
+            # of surfacing nsw_add's operator-level ValueError — the hard
+            # error stays for direct operator use
+            idx = nsw.nsw_rebalance(idx, rows_per_shard=self._nsw_rows_per_shard)
+        idx = add(idx, new)
+        # hnswlib resize analogue (local_db.py:45 max_elements): the shard
+        # count is index identity, so a long add stream fattens shards
+        # until the per-shard sequential insert/beam dominates. At 4x the
+        # build-time target, re-shard offline — recall is preserved
+        # (levels are an id-hash law; links re-prune under the same
+        # discipline), only shard membership changes.
+        if graph and self._n >= 4 * idx.rows_per_shard * idx.shard_count():
+            idx = nsw.nsw_rebalance(idx, rows_per_shard=idx.rows_per_shard)
+        self._ann_index = idx
 
     def _maintain_index_on_delete(
         self, id_list: "list[int]", for_update: bool = False
     ) -> None:
-        """Per-tier incremental maintenance for a deleted id block
-        (VERDICT r10 Next #7 — mutation-driven maintenance instead of
-        fingerprint-rotation full rebuilds): the code tiers (IVF /
-        IVF-PQ / PQ / SQ8 / BQ) store per-row codes against FROZEN
-        trained geometry, so deletion is an exact filter of the code
-        relation — search results equal a from-scratch rebuild minus
-        the rows (the geometry never depended on individual rows being
-        present). The graph tier (hnsw/nsw) mark-deletes (round 11 —
-        nsw.nsw_delete, the hnswlib mark_deleted analogue: tombstones
-        stay for routing, search excludes them, rebalance GCs them);
-        for an UPDATE the graph tier instead rebuilds lazily — the
-        replacement row would collide with its own tombstone in the
-        per-shard insertion state, and hnswlib's in-place replace has
-        the same repair caveat."""
-        import dataclasses
-
+        """Incremental maintenance for a deleted id block: the code tiers
+        filter their code relations (`_CODE_RELATIONS`); the graph tier
+        mark-deletes through `nsw_delete` (the hnswlib mark_deleted
+        analogue: tombstones stay for routing, search excludes them,
+        rebalance GCs them). For an UPDATE the graph tier instead rebuilds
+        lazily — the replacement row would collide with its own tombstone
+        in the per-shard insertion state, and hnswlib's in-place replace
+        has the same repair caveat."""
         idx = self._ann_index
         if idx is None:
             return
-        t = self.index_type
-        cond = ~F.col(self.id_col).isin(id_list)
-        if t == "ivf":
-            self._ann_index = dataclasses.replace(
-                idx, assignments=idx.assignments.where(cond)
-            )
-        elif t == "ivfpq":
-            self._ann_index = dataclasses.replace(
-                idx,
-                pq=dataclasses.replace(
-                    idx.pq, codes=idx.pq.codes.where(cond)
-                ),
-                codes_with_cluster=idx.codes_with_cluster.where(cond),
-            )
-        elif t in ("pq", "sq8", "bq"):
-            self._ann_index = dataclasses.replace(
-                idx, codes=idx.codes.where(cond)
-            )
-        elif t == "opq":
-            # codes live on the inner rotated-frame PQ index; frozen
-            # rotation/codebooks never depended on the deleted rows
-            self._ann_index = dataclasses.replace(
-                idx,
-                pq_index=dataclasses.replace(
-                    idx.pq_index, codes=idx.pq_index.codes.where(cond)
-                ),
-            )
-        elif t == "ivfopq":
-            # same law one level deeper: the rotated-frame IVF-PQ codes
-            self._ann_index = dataclasses.replace(
-                idx,
-                ivfpq=dataclasses.replace(
-                    idx.ivfpq,
-                    pq=dataclasses.replace(
-                        idx.ivfpq.pq, codes=idx.ivfpq.pq.codes.where(cond)
-                    ),
-                    codes_with_cluster=idx.ivfpq.codes_with_cluster.where(
-                        cond
-                    ),
-                ),
-            )
-        elif t in ("hnsw", "nsw") and not for_update:
-            from homemade_vector_db_spark.operators import nsw as nswmod
-
-            self._ann_index = nswmod.nsw_delete(idx, id_list)
-        else:
-            self._ann_index = None
+        paths = _CODE_RELATIONS.get(self.index_type)
+        if paths:
+            cond = ~F.col(self.id_col).isin(id_list)
+            for path in paths:
+                idx = _filter_relation(idx, path, cond)
+            self._ann_index = idx
+            return
+        delete = None if for_update else self._tier_op("{}_delete")
+        self._ann_index = delete(idx, id_list) if delete else None
 
     def merge(self, other: "VectorDatabase") -> None:
         """Absorb another database into this one — the capability a
@@ -347,11 +314,12 @@ class VectorDatabase:
         """Delete documents by id — a capability the reference explicitly
         lacks (its README:140 'no update/delete'); append-only storage
         plus an anti-join tombstone is the standard columnar answer.
-        Derived state (BM25 stats, ANN index) is invalidated and rebuilt
-        lazily; ids of remaining docs are unchanged (no re-densification
-        — result contracts key on stable ids), and the id high-water mark
-        is NOT lowered: a later `add` continues from the pre-delete
-        counter, so a deleted id is never reassigned to a new document.
+        BM25 stats are invalidated and rebuilt lazily; the ANN index is
+        maintained incrementally (`_maintain_index_on_delete`). Ids of
+        remaining docs are unchanged (no re-densification — result
+        contracts key on stable ids), and the id high-water mark is NOT
+        lowered: a later `add` continues from the pre-delete counter, so
+        a deleted id is never reassigned to a new document.
         Returns the number of rows removed."""
         df = self._require_df()
         id_list = [int(i) for i in ids]
@@ -361,8 +329,6 @@ class VectorDatabase:
         self._df = kept
         self._n = n_kept
         self._stats = None
-        # round 11 (VERDICT r10 Next #7): code tiers maintain their
-        # index incrementally on delete instead of a full rebuild
         self._maintain_index_on_delete(id_list)
         return removed
 
@@ -377,8 +343,10 @@ class VectorDatabase:
         explicitly lacks (README.md:140). Ids stay STABLE: the row keeps
         its doc_id (unlike delete+add, which would assign fresh ids).
         Implemented as anti-join tombstone + union of replacement rows;
-        None fields keep the current value. Derived state is invalidated.
-        Returns the number of rows replaced; unknown ids raise."""
+        None fields keep the current value. The ANN index takes an
+        incremental delete of the old rows plus an add-after-train
+        encode of the replacements. Returns the number of rows replaced;
+        unknown ids raise."""
         df = self._require_df()
         id_list = [int(i) for i in ids]
         if len(set(id_list)) != len(id_list):
@@ -409,23 +377,10 @@ class VectorDatabase:
                 (doc_id, pick(docs, i, cur[self.text_col]),
                  [float(x) for x in vec], meta)
             )
-        schema = T.StructType(
-            [
-                T.StructField(self.id_col, T.LongType()),
-                T.StructField(self.text_col, T.StringType()),
-                T.StructField(self.vec_col, T.ArrayType(T.FloatType())),
-                T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-            ]
-        )
-        replacement = self.spark.createDataFrame(rows, schema)
+        replacement = self._rows_df(rows)
         kept = df.where(~F.col(self.id_col).isin(id_list))
         self._df = kept.unionByName(replacement)
         self._stats = None
-        # round 11 (VERDICT r10 Next #7): update = incremental delete of
-        # the old codes + add-after-train encode of the replacements —
-        # the code tiers never rebuild; the graph tier rebuilds lazily
-        # (see _maintain_index_on_delete: a replacement row would
-        # collide with its own tombstone)
         self._maintain_index_on_delete(id_list, for_update=True)
         self._maintain_index_on_append(replacement)
         return len(rows)
@@ -499,6 +454,8 @@ class VectorDatabase:
                 k=top_k, pre_filter=pre, post_filter=post, dim=self.dim,
             )
         else:
+            if self._ann_index is None:
+                self._ann_index = self._build_index()
             res_df = self._ann_search(list(vector), top_k)
             if post is not None:
                 ids = res_df.select(self.id_col)
@@ -514,154 +471,75 @@ class VectorDatabase:
             return [(r[self.id_col], r.score) for r in res]
         return [r[self.id_col] for r in res]
 
+    def _build_index(self):
+        from homemade_vector_db_spark.operators import ann, bq, nsw, opq, pq
+
+        t, df = self.index_type, self._df
+        cols = {"id_col": self.id_col, "vec_col": self.vec_col}
+        if t == "lsh":
+            return ann.build_lsh(df, **cols)
+        if t == "nsw":
+            # reference hnsw kwargs map 1:1 (local_db.py:41-47)
+            return nsw.build_nsw(
+                df, **cols, m=self.M, ef_construction=self.ef_construction,
+                rows_per_shard=self._nsw_rows_per_shard,
+            )
+        if t in ("sq8", "bq"):
+            return self._tier_op("build_{}")(df, **cols, dim=self.dim)
+        # the IVF tiers share one nlist law; the PQ tiers one code law
+        nlist = min(self.ivf_clusters, max(1, self._n // 2))
+        if t == "ivf":
+            return ann.build_ivf(df, **cols, nlist=nlist)
+        if t == "ivfbq":
+            return bq.build_ivfbq(ann.build_ivf(df, **cols, nlist=nlist), dim=self.dim)
+        codes = {
+            "m": _clamp_m(self.pq_code_size, self.dim),
+            "codebook_size": 256,
+            "dim": self.dim,
+        }
+        if t == "ivfpq":
+            return pq.build_ivfpq(ann.build_ivf(df, **cols, nlist=nlist), **codes)
+        if t == "opq":
+            return opq.build_opq(df, **cols, **codes)
+        return opq.build_ivfopq(df, **cols, nlist=nlist, **codes)
+
     def _ann_search(self, vector: list[float], top_k: int):
-        from homemade_vector_db_spark.operators import ann
+        from homemade_vector_db_spark.operators import ann, bq, nsw, opq, pq
 
-        from homemade_vector_db_spark.operators import nsw as nswmod
+        t, idx, df = self.index_type, self._ann_index, self._df
+        # compressed tiers shortlist the reference hybrid's widened pool
+        # (max(top_k·10, 100), local_db.py:362) before the exact rerank;
+        # the PQ tiers take it as a multiple of top_k
+        pool = max(top_k * 10, 100)
+        overfetch = max(10, -(-100 // top_k))
 
-        if self._ann_index is None:
-            if self.index_type == "lsh":
-                self._ann_index = ann.build_lsh(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col
-                )
-            elif self.index_type == "nsw":
-                # reference hnsw kwargs map 1:1 (local_db.py:41-47)
-                self._ann_index = nswmod.build_nsw(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    m=self.M, ef_construction=self.ef_construction,
-                    rows_per_shard=self._nsw_rows_per_shard,
-                )
-            elif self.index_type == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
+        def nprobe(centroids) -> int:
+            # ef_search plays the IVF probe-width role (recall/cost knob)
+            return max(1, min(len(centroids), self.ef_search // 10))
 
-                self._ann_index = sqmod.build_sq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    dim=self.dim,
-                )
-            elif self.index_type == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                self._ann_index = bqmod.build_bq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    dim=self.dim,
-                )
-            elif self.index_type == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                coarse = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-                self._ann_index = bqmod.build_ivfbq(coarse, dim=self.dim)
-            elif self.index_type == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = opqmod.build_opq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    m=m, codebook_size=256, dim=self.dim,
-                )
-            elif self.index_type == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                # the FAISS OPQ{m}+IVF{nlist},PQ{m} recipe: shared
-                # m-clamp law, same nlist cap as ivf/ivfpq
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = opqmod.build_ivfopq(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                    m=m, codebook_size=256, dim=self.dim,
-                )
-            elif self.index_type == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                coarse = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-                # m = pq_code_size (the faiss IndexIVFPQ 'm'), shared
-                # clamp law
-                m = _clamp_m(self.pq_code_size, self.dim)
-                self._ann_index = pqmod.build_ivfpq(
-                    coarse, m=m, codebook_size=256, dim=self.dim
-                )
-            else:  # ivf
-                self._ann_index = ann.build_ivf(
-                    self._df, id_col=self.id_col, vec_col=self.vec_col,
-                    nlist=min(self.ivf_clusters, max(1, self._n // 2)),
-                )
-        if self.index_type == "lsh":
-            return ann.lsh_search(self._ann_index, vector, k=top_k)
-        if self.index_type == "nsw":
-            return nswmod.nsw_search(
-                self._ann_index, vector, k=top_k, ef_search=self.ef_search
+        if t == "lsh":
+            return ann.lsh_search(idx, vector, k=top_k)
+        if t == "nsw":
+            return nsw.nsw_search(idx, vector, k=top_k, ef_search=self.ef_search)
+        if t == "ivf":
+            return ann.ivf_search(idx, vector, k=top_k, nprobe=nprobe(idx.centroids))
+        if t == "ivfbq":
+            return bq.ivfbq_search(
+                idx, df, vector, k=top_k, nprobe=nprobe(idx.centroids), pool=pool,
             )
-        if self.index_type == "ivfbq":
-            from homemade_vector_db_spark.operators import bq as bqmod
-
-            # ef_search plays the probe-width role, same mapping as ivf
-            nlist = len(self._ann_index.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            return bqmod.ivfbq_search(
-                self._ann_index, self._df, vector, k=top_k, nprobe=nprobe,
-                pool=max(top_k * 10, 100),
-            )
-        if self.index_type == "ivfpq":
-            from homemade_vector_db_spark.operators import pq as pqmod
-
-            # ef_search → nprobe, same mapping as ivf/ivfbq; ADC
-            # shortlist widened to the reference hybrid's pool law
-            # (max(top_k·10, 100), local_db.py:362) before exact rerank
-            nlist = len(self._ann_index.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            overfetch = max(10, -(-100 // top_k))
-            return pqmod.ivfpq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
-                nprobe=nprobe, overfetch=overfetch,
-            )
-        if self.index_type == "ivfopq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            # ef_search -> nprobe and the widened-pool law, both exactly
-            # the ivfpq mapping; rerank is exact in the ORIGINAL frame
-            nlist = len(self._ann_index.ivfpq.centroids)
-            nprobe = max(1, min(nlist, self.ef_search // 10))
-            overfetch = max(10, -(-100 // top_k))
-            return opqmod.ivfopq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
-                nprobe=nprobe, overfetch=overfetch,
-            )
-        if self.index_type == "opq":
-            from homemade_vector_db_spark.operators import opq as opqmod
-
-            # rotated-frame ADC shortlist -> exact original-frame rerank;
-            # pool mirrors the reference hybrid's widened k
-            # (max(top_k*10, 100), local_db.py:362), same as ivfpq
-            overfetch = max(10, -(-100 // top_k))
-            return opqmod.opq_rerank_search(
-                self._ann_index, self._df, vector, k=top_k,
+        if t == "ivfpq":
+            return pq.ivfpq_rerank_search(
+                idx, df, vector, k=top_k, nprobe=nprobe(idx.centroids),
                 overfetch=overfetch,
             )
-        if self.index_type in ("sq8", "bq"):
-            # compressed shortlist -> exact rerank; pool mirrors the
-            # reference hybrid's widened k (max(top_k*10, 100),
-            # local_db.py:362)
-            from homemade_vector_db_spark.operators import bq as bqmod
-            from homemade_vector_db_spark.operators import sq as sqmod
-
-            pool = max(top_k * 10, 100)
-            search = (
-                sqmod.sq_rerank_search
-                if self.index_type == "sq8"
-                else bqmod.bq_rerank_search
+        if t == "ivfopq":
+            return opq.ivfopq_rerank_search(
+                idx, df, vector, k=top_k, nprobe=nprobe(idx.ivfpq.centroids),
+                overfetch=overfetch,
             )
-            return search(
-                self._ann_index, self._df, vector, k=top_k, pool=pool
-            )
-        # ef_search plays the probe-width role (recall/cost knob): the
-        # reference default ef_search=50 → nprobe 5 ≈ FAISS's nlist//10
-        nprobe = max(1, min(self._ann_index.nlist, self.ef_search // 10))
-        return ann.ivf_search(self._ann_index, vector, k=top_k, nprobe=nprobe)
+        if t == "opq":
+            return opq.opq_rerank_search(idx, df, vector, k=top_k, overfetch=overfetch)
+        return self._tier_op("{}_rerank_search")(idx, df, vector, k=top_k, pool=pool)
 
     def _compile_filter(self, flt):
         if flt is None or isinstance(flt, Column):
@@ -704,22 +582,13 @@ class VectorDatabase:
                     pred = pred & (F.col(k) == F.lit(v))
                 else:
                     pred = pred & (F.col("meta").getItem(k) == F.lit(str(v)))
-            out = (
-                df.where(pred)
-                .select(self.id_col)
-                .orderBy(F.asc(self.id_col))
-            )
-            if top_k is not None and 0 < top_k:
-                out = out.limit(top_k)
-        elif filter_func is not None:
-            pred = self._compile_filter(filter_func)
-            out = df.where(pred).select(self.id_col).orderBy(F.asc(self.id_col))
-            if top_k is not None and 0 < top_k:
-                out = out.limit(top_k)
         else:
-            out = df.select(self.id_col).orderBy(F.asc(self.id_col))
-            if top_k is not None and 0 < top_k:
-                out = out.limit(top_k)
+            pred = self._compile_filter(filter_func)
+        if pred is not None:
+            df = df.where(pred)
+        out = df.select(self.id_col).orderBy(F.asc(self.id_col))
+        if top_k is not None and 0 < top_k:
+            out = out.limit(top_k)
         if as_dataframe:
             return out
         if (top_k is None or top_k <= 0) and self._n > self.UNBOUNDED_COLLECT_CAP:
@@ -779,68 +648,28 @@ class VectorDatabase:
         include_index=True also persists the derived BM25 relations
         (postings / term_stats / corpus_stats) so `load` skips the
         re-tokenize the reference performs on every load
-        (local_db.py:257). Index-type discovery comes from the manifest,
-        not file sniffing (cleaner than local_db.py:233-248).
+        (local_db.py:257), and the ANN index through the tier's
+        `save_<stem>` — cluster-partitioned parquet / MLWriter instead of
+        the reference's opaque hnsw.idx / faiss.idx blobs
+        (local_db.py:218-221). Index-type discovery comes from the
+        manifest, not file sniffing (cleaner than local_db.py:233-248).
         """
         df = self._require_df()
         df.write.mode("overwrite").parquet(os.path.join(folder_path, "documents"))
-        has_stats = False
-        if include_index and self._stats is not None:
-            s = self._stats
-            s.postings.write.mode("overwrite").parquet(
-                os.path.join(folder_path, "bm25", "postings")
-            )
-            s.term_stats.write.mode("overwrite").parquet(
-                os.path.join(folder_path, "bm25", "term_stats")
-            )
-            s.corpus_stats.write.mode("overwrite").parquet(
-                os.path.join(folder_path, "bm25", "corpus_stats")
-            )
-            has_stats = True
-        has_ann = False
-        if include_index and self._ann_index is not None:
-            # O8 parity for the native index files (hnsw.idx / faiss.idx,
-            # local_db.py:218-221) — but cluster-partitioned parquet /
-            # MLWriter instead of opaque native blobs.
-            from homemade_vector_db_spark.operators import ann
-
-            ann_path = os.path.join(folder_path, "ann")
-            if self.index_type == "lsh":
-                ann.save_lsh(self._ann_index, ann_path)
-            elif self.index_type == "ivf":
-                ann.save_ivf(self._ann_index, ann_path)
-            elif self.index_type == "nsw":
-                from homemade_vector_db_spark.operators import nsw as nswmod
-
-                nswmod.save_nsw(self._ann_index, ann_path)
-            elif self.index_type == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
-
-                sqmod.save_sq(self._ann_index, ann_path)
-            elif self.index_type == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                bqmod.save_bq(self._ann_index, ann_path)
-            elif self.index_type == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                bqmod.save_ivfbq(self._ann_index, ann_path)
-            elif self.index_type == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                pqmod.save_ivfpq(self._ann_index, ann_path)
-            elif self.index_type == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                opqmod.save_opq(self._ann_index, ann_path)
-            elif self.index_type == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                opqmod.save_ivfopq(self._ann_index, ann_path)
-            has_ann = self.index_type in (
-                "lsh", "ivf", "ivfpq", "nsw", "sq8", "bq", "ivfbq", "opq",
-                "ivfopq",
-            )
+        has_stats = include_index and self._stats is not None
+        if has_stats:
+            for name in ("postings", "term_stats", "corpus_stats"):
+                getattr(self._stats, name).write.mode("overwrite").parquet(
+                    os.path.join(folder_path, "bm25", name)
+                )
+        has_ann = (
+            include_index
+            and self._ann_index is not None
+            and _TIERS[self.index_type] is not None
+        )
+        if has_ann:
+            save = self._tier_op("save_{}")
+            save(self._ann_index, os.path.join(folder_path, "ann"))
         manifest = {
             "dim": self.dim,
             "index_type": self.index_type,
@@ -870,50 +699,18 @@ class VectorDatabase:
             db._next_id = int(m["next_id"])
         if m.get("has_bm25_stats"):
             p = os.path.join(folder_path, "bm25")
+            postings = spark.read.parquet(os.path.join(p, "postings"))
             db._stats = bm25.BM25Stats(
-                postings=spark.read.parquet(os.path.join(p, "postings")),
-                doc_len=spark.read.parquet(os.path.join(p, "postings")).select(
-                    "doc_id", "dl"
-                ).distinct(),
+                postings=postings,
+                doc_len=postings.select("doc_id", "dl").distinct(),
                 term_stats=spark.read.parquet(os.path.join(p, "term_stats")),
                 corpus_stats=spark.read.parquet(os.path.join(p, "corpus_stats")),
             )
         if m.get("has_ann_index"):
-            from homemade_vector_db_spark.operators import ann
-
-            ann_path = os.path.join(folder_path, "ann")
-            if m["index_type"] == "lsh":
-                db._ann_index = ann.load_lsh(spark, ann_path, df)
-            elif m["index_type"] == "ivf":
-                db._ann_index = ann.load_ivf(spark, ann_path)
-            elif m["index_type"] == "nsw":
-                from homemade_vector_db_spark.operators import nsw as nswmod
-
-                db._ann_index = nswmod.load_nsw(spark, ann_path)
-            elif m["index_type"] == "sq8":
-                from homemade_vector_db_spark.operators import sq as sqmod
-
-                db._ann_index = sqmod.load_sq(spark, ann_path)
-            elif m["index_type"] == "bq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                db._ann_index = bqmod.load_bq(spark, ann_path)
-            elif m["index_type"] == "ivfbq":
-                from homemade_vector_db_spark.operators import bq as bqmod
-
-                db._ann_index = bqmod.load_ivfbq(spark, ann_path)
-            elif m["index_type"] == "opq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                db._ann_index = opqmod.load_opq(spark, ann_path)
-            elif m["index_type"] == "ivfopq":
-                from homemade_vector_db_spark.operators import opq as opqmod
-
-                db._ann_index = opqmod.load_ivfopq(spark, ann_path)
-            elif m["index_type"] == "ivfpq":
-                from homemade_vector_db_spark.operators import pq as pqmod
-
-                db._ann_index = pqmod.load_ivfpq(spark, ann_path)
+            load = db._tier_op("load_{}")
+            # the LSH model re-hashes the documents on load
+            extra = (df,) if db.index_type == "lsh" else ()
+            db._ann_index = load(spark, os.path.join(folder_path, "ann"), *extra)
         return db
 
     @classmethod

@@ -992,23 +992,25 @@ def connected_components(
     take the distributed loop; set driver_threshold=0 to force it.
     """
     import warnings
+
+    from pyspark.sql import Observation
+
     # materialize the pair list ONCE: the symmetric union references
     # `pairs` twice, and without a barrier the (possibly expensive)
-    # upstream candidate-generation pipeline would execute per branch
-    pairs = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).localCheckpoint(eager=True)
-    # round 14 (guide §5, the graph_kcore r13 precedent): ONE bounded
-    # limit-probe collect decides the tier AND, below the bound, already
-    # holds the edges — the separate count() action is gone. When the
-    # graph exceeds the bound, the probe stops at driver_threshold + 1
-    # rows (bounded driver memory) and the distributed loop runs.
-    # Union-find is edge-order-independent (parent always points to the
-    # smaller id, so every root is its component minimum), so the
-    # arbitrary rows a LIMIT returns below the bound — which are ALL
-    # rows there — feed it exactly as collect() did.
-    probe = pairs.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
+    # upstream candidate-generation pipeline would execute per branch.
+    # The edge count that decides the tier rides the same job as an
+    # observed metric, so no extra action runs and an over-bound graph
+    # ships no rows to the driver; at or under the bound the edges are
+    # collected once. Union-find is edge-order-independent (parent
+    # always points to the smaller id, so every root is its component
+    # minimum).
+    size = Observation()
+    pairs = (
+        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    if size.get["n"] <= driver_threshold:
         parent: dict[int, int] = {}
 
         def find(x: int) -> int:
@@ -1018,7 +1020,7 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in probe:
+        for r in pairs.collect():
             ra, rb = find(r.src), find(r.dst)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)

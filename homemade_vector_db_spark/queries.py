@@ -18774,16 +18774,6 @@ _ORACLES["experiment_readout"] = _experiment_readout_oracle()
 _ORACLES["drift_dashboard"] = _drift_dashboard_oracle()
 
 
-# Round-12 driver window (slots 1-50), VERDICT r11 Next #7: every entry
-# whose plan changed since its last driver row leads. Slots 1-2 are the
-# two semantics/plan rewrites (tfidf df-cap re-earns a NEW hash;
-# feature_hash_load's Expand-free decomposition); 3-11 the
-# materialized-graph family (exact/ANN/base graphs now fingerprint-keyed
-# artifacts shared across gates); 12-19 the graph consumers reading the
-# shared artifact; 20-28 the round-11 BM25-consumer rewrites that were
-# builder-verified but missed the r11 window; the rest rotates in the
-# stalest remaining driver rows (all r02-vintage; every entry is also
-# covered by the regenerated standing CORRECTNESS_sf0.1.json).
 # Round-13 window: 1-14 every entry whose executed plan changed this
 # round — the new IVF-OPQ gate; the OPQ gate (learn_rotation refactor +
 # full-rank guard run inside its index build); the NN-Descent family
@@ -18846,118 +18836,6 @@ _R13_WINDOW = [
     "purchase_state_pit",
     "radius_search",
     "user_state_scd2",
-]
-
-_R12_WINDOW = [
-    "opq_recall",  # NEW round 12: rotated-PQ compression tier gate
-    "tfidf_cosine_neardup",
-    "feature_hash_load",
-    "knn_graph",
-    "knn_graph_auto",
-    "knn_graph_recall",
-    "knn_graph_incremental",
-    "graph_semdedup",
-    "graph_semdedup_ann_check",
-    "knn_graph_stats",
-    "maxsim_token_topk",
-    "maxsim_rerank_topk",
-    "graph_pagerank",
-    "graph_triangles",
-    "graph_kcore",
-    "graph_hits",
-    "graph_modularity",
-    "wedge_recommend",
-    "link_negatives",
-    "label_prop_round",
-    "bm25_batch",
-    "hybrid_topk",
-    "hybrid_filtered",
-    "hybrid_batch",
-    "chunk_bm25_topk",
-    "bm25_rerank_topk",
-    "prf_expansion_topk",
-    "retrieval_eval",
-    "fuzzy_term_search",
-    # stalest driver rows (last window: round 2)
-    "ann_ivf_recall",
-    "ann_lsh_recall",
-    "bigrams_udtf",
-    "brand_quantity_revenue",
-    "clicks_except_all_views",
-    "corpus_prep",
-    "cross_source_contamination",
-    "edit_distance_neardup",
-    "geomean_udaf",
-    "ivfpq_recall",
-    "label_centroids",
-    "lapsed_customers",
-    "late_orders_by_priority",
-    "lsh_neardup_check",
-    "multi_supplier_orders",
-    "ndv_sketch_check",
-    "neardup_components",
-    "order_price_deciles",
-    "orders_above_avg",
-    "parties_by_nation",
-    "pctl_sketch_check",
-    "pivot_events",
-]
-
-# Round-11 window (superseded; kept for the audit trail of which rows
-# earned driver checks when).
-_R11_WINDOW = [
-    "maxsim_token_topk",
-    "maxsim_rerank_topk",
-    "term_proximity_topk",
-    "t_closeness",
-    "dow_revenue_profile",
-    "snippet_extract",
-    "chi2_lang_source",
-    "category_mix_drift",
-    "corpus_health",
-    "experiment_readout",
-    "drift_dashboard",
-    "knn_graph_incremental",
-    # r01-vintage rows
-    "knn_exact",
-    "bm25_topk",
-    "knn_prefilter",
-    "knn_postfilter",
-    "cosine_topk",
-    "meta_conditions",
-    "point_lookup",
-    "count",
-    "top_customers",
-    "events_hourly",
-    "dedup_exact",
-    "ngram_jaccard_neardup",
-    "token_count",
-    "quality_score",
-    "lang_id",
-    "fingerprint",
-    "top_docs_per_lang",
-    "user_running_total",
-    "knn_prepost",
-    "minhash_neardup",
-    "asof_click_before_purchase",
-    "pricing_rollup",
-    "clickers_not_buyers",
-    "props_json_stats",
-    "distinct_users_per_type",
-    "parts_with_lineitems",
-    "customers_without_orders",
-    "value_percentiles",
-    "top_terms",
-    "clicks_after_errors",
-    "sessionize",
-    "media_bytes",
-    "top_orders_q3",
-    "cube_pricing",
-    "grouping_sets_pricing",
-    "length_histogram",
-    # r02-vintage rows
-    "events_sliding",
-    "users_intersect",
 ]
 
 

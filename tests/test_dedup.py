@@ -228,23 +228,36 @@ def test_connected_components_long_chain_converges(spark):
     assert set(got.values()) == {0} and len(got) == 12
 
 
-def test_connected_components_probe_tier_boundary(spark):
-    # r14: the driver-tier decision is a limit(threshold+1) probe, not a
-    # count — a graph ONE edge over the bound must take the distributed
-    # loop and still agree with the driver union-find result
+def test_connected_components_probe_tier_boundary(spark, monkeypatch):
+    # a graph ONE edge over the bound must take the distributed loop and
+    # still agree with the driver union-find result; driver memory is
+    # bounded by construction, so no collect inside an over-bound call
+    # returns more than driver_threshold rows
     pairs = spark.createDataFrame(
         [(1, 2), (3, 4), (4, 5)], "a_id LONG, b_id LONG"
     )
+    cls = type(pairs)
+    collect, sizes = cls.collect, []
+
+    def sized(df, *args, **kwargs):
+        out = collect(df, *args, **kwargs)
+        sizes.append(len(out))
+        return out
+
+    def components(threshold):
+        sizes.clear()
+        out = dedup.connected_components(pairs, driver_threshold=threshold)
+        got = out.collect()
+        sizes.pop()  # the caller's own collect of the result
+        return {r.doc_id: r.component for r in got}
+
+    monkeypatch.setattr(cls, "collect", sized)
     want = {1: 1, 2: 1, 3: 3, 4: 3, 5: 3}
-    over = {
-        r.doc_id: r.component
-        for r in dedup.connected_components(pairs, driver_threshold=2).collect()
-    }
-    under = {
-        r.doc_id: r.component
-        for r in dedup.connected_components(pairs, driver_threshold=3).collect()
-    }
-    assert over == want and under == want
+    for threshold in (0, 2):
+        assert components(threshold) == want
+        assert all(n <= threshold for n in sizes), (threshold, sizes)
+    assert components(3) == want
+    assert sizes == [3]  # at the bound the edges are collected once
 
 
 def test_embedding_neardup_auto_dispatches_blas_below_bound(spark):
