@@ -9,8 +9,10 @@ DataFrame plan.
 State: one `documents` DataFrame (doc_id, text, embedding, meta columns)
 plus derived BM25 stats — the Spark analogue of the reference's parallel
 lists (local_db.py:35-38). `add` is unionByName + stats invalidation instead
-of the reference's full-rebuild-per-add (README.md:152); persistence is
-parquet + a JSON manifest instead of pickle sniffing (local_db.py:210-265).
+of the reference's full-rebuild-per-add (README.md:152); appended rows
+enter as Arrow record batches, so scans of the corpus never re-run Python.
+Persistence is parquet + a JSON manifest instead of pickle sniffing
+(local_db.py:210-265).
 
 index_type picks the vector index in one place, as the reference's
 constructor does (local_db.py:41-54); `_TIERS` maps each type to its
@@ -36,6 +38,8 @@ import json
 import os
 from typing import Any, Callable, Mapping, Sequence
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -167,7 +171,49 @@ class VectorDatabase:
         return getattr(module, name.format(stem), None)
 
     # ------------------------------------------------------------------ ingest
-    def _rows_df(self, rows: list[tuple]) -> DataFrame:
+    def _rows_df(
+        self,
+        ids: Sequence[int],
+        docs: Sequence[str],
+        vectors: Sequence[Sequence[float]],
+        metas: Sequence[Mapping[str, str]],
+    ) -> DataFrame:
+        """One appended row block as a DataFrame read from Arrow record
+        batches, the one builder for `add` and `update`. The JVM owns the
+        rows from here on, so no scan of the corpus re-enters Python.
+        The block is sliced into up to `defaultParallelism` batches: Spark
+        keeps a small block as a local relation scanned over that many
+        partitions, and gives a block above
+        `spark.sql.execution.arrow.localRelationThreshold` one partition
+        per batch, so a large block keeps its scan parallelism either way.
+        Vectors are rounded to float32 once, with NumPy (round to nearest,
+        the same value Spark's double→float cast gives)."""
+        for v in vectors:
+            if len(v) != self.dim:
+                raise ValueError(f"vector dim {len(v)} != {self.dim}")
+        n = len(ids)
+        vecs = np.asarray(vectors)
+        if vecs.dtype == object:  # NumPy would turn a None into NaN
+            raise TypeError("vectors must hold numbers only")
+        flat = vecs.astype(np.float32).reshape(n * self.dim)
+        offsets = np.arange(0, (n + 1) * self.dim, self.dim, dtype=np.int32)
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids, pa.int64()),
+                pa.array(docs, pa.string()),
+                pa.ListArray.from_arrays(offsets, flat),
+                pa.array(metas, pa.map_(pa.string(), pa.string())),
+            ],
+            names=[self.id_col, self.text_col, self.vec_col, "meta"],
+        )
+        # no empty slice: Spark's Arrow reader stops at a zero-row batch
+        # and silently drops every row after it
+        parts = max(1, min(n, self.spark.sparkContext.defaultParallelism))
+        bounds = [n * i // parts for i in range(parts + 1)]
+        table = pa.Table.from_batches(
+            [batch.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])],
+            batch.schema,
+        )
         schema = T.StructType(
             [
                 T.StructField(self.id_col, T.LongType()),
@@ -176,7 +222,7 @@ class VectorDatabase:
                 T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
             ]
         )
-        return self.spark.createDataFrame(rows, schema)
+        return self.spark.createDataFrame(table, schema)
 
     def add(
         self,
@@ -186,24 +232,24 @@ class VectorDatabase:
     ) -> None:
         """Append rows with dense insertion-ordered ids (local_db.py:56-80).
 
-        Unlike the reference, BM25 stats are invalidated lazily, not rebuilt
-        eagerly per batch.
+        The block enters as Arrow record batches (`_rows_df`): vectors are
+        converted to float32 once, with NumPy, and meta values are
+        stringified. Unlike the reference, BM25 stats are invalidated
+        lazily, not rebuilt eagerly per batch.
         """
         if len(docs) != len(vectors):
             raise ValueError("docs and vectors must have equal length")
-        for v in vectors:
-            if len(v) != self.dim:
-                raise ValueError(f"vector dim {len(v)} != {self.dim}")
         metas = list(metas) if metas is not None else [{} for _ in docs]
+        if len(metas) != len(docs):
+            raise ValueError("docs and metas must have equal length")
         start = self._ensure_next_id()
-        rows = [
-            (start + i, d, [float(x) for x in v], {k: str(val) for k, val in m.items()})
-            for i, (d, v, m) in enumerate(zip(docs, vectors, metas))
-        ]
-        new = self._rows_df(rows)
+        ids = range(start, start + len(docs))
+        new = self._rows_df(
+            ids, docs, vectors, [{k: str(v) for k, v in m.items()} for m in metas]
+        )
         self._df = new if self._df is None else self._df.unionByName(new)
-        self._n += len(rows)
-        self._next_id = start + len(rows)
+        self._n += len(ids)
+        self._next_id = ids.stop
         self._stats = None  # derived state invalidated, rebuilt lazily
         self._maintain_index_on_append(new)
 
@@ -359,31 +405,21 @@ class VectorDatabase:
         if missing:
             raise IndexError(f"doc_ids not found: {missing}")
 
-        def pick(seq, i, fallback):
-            return seq[i] if seq is not None else fallback
-
-        rows = []
-        for i, doc_id in enumerate(id_list):
-            cur = current[doc_id]
-            vec = pick(vectors, i, cur[self.vec_col])
-            if len(vec) != self.dim:
-                raise ValueError(f"vector dim {len(vec)} != {self.dim}")
-            meta = (
-                {k: str(v) for k, v in metas[i].items()}
-                if metas is not None
-                else dict(cur["meta"] or {})
-            )
-            rows.append(
-                (doc_id, pick(docs, i, cur[self.text_col]),
-                 [float(x) for x in vec], meta)
-            )
-        replacement = self._rows_df(rows)
+        cur = [current[i] for i in id_list]
+        replacement = self._rows_df(
+            id_list,
+            docs if docs is not None else [r[self.text_col] for r in cur],
+            vectors if vectors is not None else [r[self.vec_col] for r in cur],
+            [{k: str(v) for k, v in m.items()} for m in metas]
+            if metas is not None
+            else [dict(r["meta"] or {}) for r in cur],
+        )
         kept = df.where(~F.col(self.id_col).isin(id_list))
         self._df = kept.unionByName(replacement)
         self._stats = None
         self._maintain_index_on_delete(id_list, for_update=True)
         self._maintain_index_on_append(replacement)
-        return len(rows)
+        return len(id_list)
 
     def attach(self, df: DataFrame, n: int | None = None) -> "VectorDatabase":
         """Wrap an existing documents DataFrame (bulk path — preferred at scale)."""
@@ -815,7 +851,7 @@ class VectorDatabase:
             text_col=text_col,
             vec_col=vec_col,
         )
-        db.add(docs, vectors.tolist(), metas)
+        db.add(docs, vectors, metas)
         return db
 
     # ------------------------------------------------------------------ misc

@@ -472,7 +472,7 @@ def knn_graph_nndescent(
     nb = max(1, n // (2 * big_k))
     m = max(1, big_k // n_bucketings)
 
-    def bucket_topm(key, pdf: pd.DataFrame):
+    def bucket_topm(key, pdf):
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
         if len(ids) < 2:

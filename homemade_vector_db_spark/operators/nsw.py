@@ -199,7 +199,7 @@ def build_nsw(
         F.col(vec_col).alias("vec"),
     )
 
-    def build(key, pdf: pd.DataFrame):
+    def build(key, pdf):
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
         X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
@@ -272,7 +272,7 @@ def nsw_search(
     # its DataFrame (and the SparkContext) into the executor pickle
     id_col = index.id_col
 
-    def search(key, pdf: pd.DataFrame):
+    def search(key, pdf):
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
         X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
@@ -374,7 +374,7 @@ def nsw_batch_search(
     )
     id_col = index.id_col
 
-    def search(key, pdf: pd.DataFrame):
+    def search(key, pdf):
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy(dtype=np.int64)
         X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
@@ -550,7 +550,7 @@ def nsw_add(
     existing = index.graph.withColumn("is_new", F.lit(False))
     m, ef = index.m, index.ef_construction
 
-    def insert(key, pdf: pd.DataFrame):
+    def insert(key, pdf):
         old = pdf[~pdf["is_new"]].sort_values("id").reset_index(drop=True)
         new = pdf[pdf["is_new"]].sort_values("id").reset_index(drop=True)
         if len(new) == 0:

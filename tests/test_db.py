@@ -116,10 +116,16 @@ def test_hybrid_weights(db):
 
 
 def test_point_lookup(db):
+    import numpy as np
+
     assert db.get_document(2) == DOCS[2]
     assert db.get_metadata(1)["amount"] == "1250.75"  # stringified map
     with pytest.raises(IndexError):
         db.get_document(99)
+    # stored embeddings are the float32 rounding of the input, bit for bit
+    stored = {r.doc_id: r.embedding for r in db._df.collect()}
+    for i, v in enumerate(VECS):
+        assert np.float32(stored[i]).tobytes() == np.float32(v).tobytes()
 
 
 def test_save_load_roundtrip(db, spark, tmp_path_factory):
@@ -154,15 +160,38 @@ def test_add_validates_dim(spark):
         d.add(["x"], [[1.0, 2.0]])
     with pytest.raises(ValueError):
         d.add(["x", "y"], [[1.0, 2.0, 3.0, 4.0]])
+    with pytest.raises(ValueError, match="metas"):
+        d.add(["x", "y"], [[1.0, 2.0, 3.0, 4.0]] * 2, [{}])
+    with pytest.raises(TypeError):  # a missing component is not a NaN
+        d.add(["x"], [[None, 2.0, 3.0, 4.0]])
+    assert len(d) == 0
 
 
 def test_incremental_add(spark):
+    import numpy as np
+
     d = VectorDatabase(spark, dim=2)
     d.add(["first doc"], [[0.0, 0.0]])
     d.add(["second doc"], [[1.0, 1.0]])
     assert len(d) == 2
     assert d.query_vector([0.9, 0.9], top_k=1) == [1]
     assert d.get_document(1) == "second doc"
+    # an empty block changes neither the size nor the id counter
+    d.add([], [], [])
+    assert len(d) == 2 and d._next_id == 2
+    # a non-str document is refused before any state changes
+    with pytest.raises(TypeError):
+        d.add([5], [[0.0, 0.0]])
+    assert len(d) == 2 and d._next_id == 2
+    # float64 input with full mantissas, unicode text, metas=None → {}
+    vecs = np.random.default_rng(3).random((3, 2))
+    texts = ["naïve café", "日本語の文書", "emoji 🚀 doc"]
+    d.add(texts, vecs)
+    rows = {r.doc_id: r for r in d._df.collect()}
+    for i, (t, v) in enumerate(zip(texts, vecs), start=2):
+        assert rows[i].text == t
+        assert d.get_metadata(i) == {}
+        assert np.float32(rows[i].embedding).tobytes() == np.float32(v).tobytes()
 
 
 @pytest.mark.parametrize("index_type", _INDEX_TYPES)
@@ -403,6 +432,40 @@ def test_update_unknown_or_bad_args(spark):
         db.update([0, 0], docs=["x", "y"])
     with _pytest.raises(ValueError, match="dim"):
         db.update([0], vectors=[[1.0]])
+
+
+def test_written_rows_enter_as_arrow_without_python_lineage(spark):
+    """Every write path (add, update, merge) leaves a corpus whose scans
+    stay in the JVM: no PythonRDD in its lineage, and an added block of
+    at least defaultParallelism rows keeps that many partitions, whether
+    Spark holds it as a local relation or, above the local-relation
+    threshold, as one partition per Arrow batch."""
+    import random
+
+    rng = random.Random(23)
+    mk = lambda: [rng.random() for _ in range(4)]
+    parts = spark.sparkContext.defaultParallelism
+    n = 2 * parts + 1
+    db = VectorDatabase(spark, dim=4)
+    db.add([f"doc {i}" for i in range(n)], [mk() for _ in range(n)])
+    assert db._df.rdd.getNumPartitions() == parts
+    db.add(["late doc"], [mk()], [{"k": 1}])
+    db.update([0], docs=["doc replaced"], vectors=[mk()])
+    other = VectorDatabase(spark, dim=4)
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        other.add([f"other {i}" for i in range(n)], [mk() for _ in range(n)])
+    finally:
+        spark.conf.set(key, threshold)
+    assert other._df.rdd.getNumPartitions() == parts
+    assert sorted(r.doc_id for r in other._df.collect()) == list(range(n))
+    db.merge(other)
+    assert len(db) == 2 * n + 1
+    assert db._df.count() == 2 * n + 1
+    lineage = db._df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
 
 
 def test_attach_then_add_continues_from_max_id(spark):
